@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_flink_spark.run_cache import begin_run, run_persist_per_invocation
+
 #: hard cap on rows a BroadcastStream may materialize on the driver —
 #: broadcast state is per-task-replicated, so anything bigger is a design
 #: error, not a tuning problem (r6 VERDICT finding #3)
@@ -203,6 +205,7 @@ class ExecutionEnvironment:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._sinks: list[tuple[DataFrame, _Sink]] = []
+        begin_run()  # a new job graph never reuses an earlier one's persists
 
     @classmethod
     def get_instance(cls, spark: SparkSession) -> "ExecutionEnvironment":
@@ -317,9 +320,7 @@ class NonKeyedPartitionStream:
         # Per-invocation persist (ADVICE r13 #1): two TwoOutput operators
         # in one job graph must not unpersist each other's still-lazy
         # tagged DataFrame — each invocation gets its own entry; the
-        # bounded registry still drops the previous run's entries.
-        from apache_flink_spark.run_cache import run_persist_per_invocation
-
+        # next run (query call or environment) drops this run's entries.
         tagged = run_persist_per_invocation(
             self.df.mapInPandas(runner, tag_schema),
             "datastream_v2.side_output.tagged",

@@ -41,14 +41,18 @@ def query(name: str, oracle: str | None = None, streaming: bool = False):
     identical whether the session came from ``get_spark()`` or a vanilla
     ``SparkSession.builder.getOrCreate()`` — the r1 failure mode was exactly
     a harness session missing ``spark.sql.legacy.parquet.nanosAsLong``.
+    Each call also starts a new ``run_cache`` run, so per-invocation
+    persists never carry over from the previous call.
     """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            from apache_flink_spark.run_cache import begin_run
             from apache_flink_spark.session import configure_session
 
             configure_session(spark)
+            begin_run()
             return fn(spark, sf_dir)
 
         QUERIES[name] = wrapped

@@ -24,7 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _LAST: dict[str, DataFrame] = {}
-_SITE_SEQ: dict[str, int] = {}
+#: site -> (run generation, that run's persisted DataFrames)
+_PER_INVOCATION: dict[str, tuple[int, list[DataFrame]]] = {}
+_RUN_GEN = 0
 
 
 def _drop(prev: DataFrame) -> None:
@@ -58,20 +60,30 @@ def run_persist(df: DataFrame, key: str) -> DataFrame:
     return df
 
 
-def run_persist_per_invocation(
-    df: DataFrame, site: str, keep_last: int = 2
-) -> DataFrame:
+def begin_run() -> None:
+    """Mark the start of a new run (one query invocation or one job graph).
+
+    :func:`run_persist_per_invocation` drops a site's entries from every
+    earlier run at the site's next invocation, so a run can only start
+    cold, however often the site ran in the previous one."""
+    global _RUN_GEN
+    _RUN_GEN += 1
+
+
+def run_persist_per_invocation(df: DataFrame, site: str) -> DataFrame:
     """Per-run persist for call sites that may run MORE than once inside
     one job graph (e.g. two side-output operators in one pipeline,
-    ADVICE r13 #1): every invocation gets its own registry entry, so a
-    later invocation never unpersists an earlier, still-lazy sibling.
-    Cross-run reuse stays impossible with a bounded registry: the entry
-    ``keep_last`` invocations back is dropped at each new invocation, so
-    a repeated run's invocations evict the previous run's."""
-    n = _SITE_SEQ.get(site, 0)
-    _SITE_SEQ[site] = n + 1
-    old = _LAST.pop(f"{site}#{n - keep_last}", None)
-    if old is not None:
-        _drop(old)
-    _LAST[f"{site}#{n}"] = df.persist()
+    ADVICE r13 #1): every invocation of the current run keeps its entry,
+    so a later invocation never unpersists an earlier, still-lazy
+    sibling. The first invocation after :func:`begin_run` drops the
+    site's entries from earlier runs, so cross-run reuse is impossible
+    (a bound on the entry count instead would let a site invoked once
+    per run keep the previous run's entry alive)."""
+    gen, dfs = _PER_INVOCATION.get(site, (_RUN_GEN, []))
+    if gen != _RUN_GEN:
+        for prev in dfs:
+            _drop(prev)
+        dfs = []
+    dfs.append(df.persist())
+    _PER_INVOCATION[site] = (_RUN_GEN, dfs)
     return df

@@ -36,6 +36,9 @@ _BASE_CONF = {
     # Arrow batch size for mapInPandas/applyInPandas operators.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     "spark.ui.enabled": "false",
+    # Python workers fork from a daemon that stops every task re-reading
+    # pyspark.zip's directory (pyworker.py). Static: build time only.
+    "spark.python.daemon.module": "apache_flink_spark.pyworker",
 }
 
 # Confs CORRECTNESS depends on — enforced on every caller-provided session

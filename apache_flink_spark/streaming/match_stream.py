@@ -99,6 +99,8 @@ extents) — each errors loudly with a batch-path pointer.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
+from operator import or_
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -857,10 +859,13 @@ def streaming_match_recognize(
     # matching), and its ignore-variable bit (0 when the element has no
     # ignore edge — callers only consult it when one exists).
     elem_bits = [[(v, var_bit[v]) for v in e[0]] for e in pat]
-    elem_mask = [
-        int(sum(b for _, b in bits)) for bits in elem_bits
-    ]
+    elem_mask = [reduce(or_, (b for _, b in bits), 0) for bits in elem_bits]
     ign_mask = [var_bit[e[3]] if e[3] is not None else 0 for e in pat]
+    # ign_ok reads a zero mask as "no ignore edge" and its caller guards on
+    # the element's ignore variable; that holds only while every ignore
+    # edge owns a nonzero bit.
+    if any((m == 0) != (e[3] is None) for m, e in zip(ign_mask, pat)):
+        raise AssertionError("an ignore edge has a zero variable mask")
     meas = list(measures)
     n_parts = len(part_cols)
     tb_col = tiebreaks[0] if tiebreaks else None

@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
@@ -194,6 +195,39 @@ HEADLINE = [
     "tvf_raw_expand",
     "lookup_join_snapshot",
 ]
+
+
+def _steal_pct_of_busy(before: list[int], after: list[int]) -> float | None:
+    """Stolen share of busy CPU between two /proc/stat ``cpu`` lines, or
+    None when the kernel reports no steal field or nothing was busy.
+
+    Fields: user nice system idle iowait irq softirq steal guest
+    guest_nice. Guest time is already counted in user/nice, so it is
+    taken out of busy time rather than counted twice."""
+    d = [b - a for a, b in zip(before, after)]
+    if len(d) < 8:
+        return None
+    busy = sum(d) - d[3] - d[4] - sum(d[8:10])  # minus idle, iowait, guest
+    return round(d[7] / busy * 100, 1) if busy > 0 else None
+
+
+def _committed_round(repo: str) -> int | None:
+    """Highest round N among the ``BENCH_rN.json`` files git tracks in
+    ``repo``, 0 if none, None if git cannot tell. Uncommitted artifacts
+    must not count: a stray local BENCH_r15.json stamped the r14 run's
+    sidecar as r15."""
+    try:
+        listed = subprocess.run(
+            ["git", "ls-files", "--", "BENCH_r*.json"],
+            cwd=repo, capture_output=True, text=True, check=True, timeout=30,
+        ).stdout.split()
+    except (OSError, subprocess.SubprocessError):
+        return None
+    rounds = [
+        int(m.group(1)) for p in listed
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", p))
+    ]
+    return max(rounds, default=0)
 
 
 def main() -> None:
@@ -519,11 +553,9 @@ def main() -> None:
     out["loadavg"] = [round(x, 2) for x in os.getloadavg()]
     detail["loadavg"] = out["loadavg"]
     cpu_t1 = _cpu_stat()
-    if cpu_t0 and cpu_t1:
-        d = [b - a for a, b in zip(cpu_t0, cpu_t1)]
-        busy = sum(d) - d[3] - d[4]  # minus idle, iowait
-        if busy > 0 and len(d) > 7:
-            detail["cpu_steal_pct_of_busy"] = round(d[7] / busy * 100, 1)
+    steal = _steal_pct_of_busy(cpu_t0, cpu_t1)
+    if steal is not None:
+        detail["cpu_steal_pct_of_busy"] = steal
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     # r14 (VERDICT r13 next-item #2): the working-tree BENCH_DETAIL.json
@@ -533,18 +565,14 @@ def main() -> None:
     # sidecar (round = highest committed BENCH_r*.json + 1 — the driver
     # commits its artifact only after the round) so per-query
     # round-over-round comparison always has committed artifacts.
-    # Subset/test runs (query override or detail override) don't snapshot.
-    if not subset and not os.environ.get("SPARK_GRAFT_BENCH_DETAIL"):
+    # Subset/test runs (query override or detail override) don't snapshot,
+    # and neither does a checkout whose committed round git cannot tell.
+    here = os.path.dirname(os.path.abspath(__file__))
+    snapshot = not subset and not os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
+    committed = _committed_round(here) if snapshot else None
+    if committed is not None:
         try:
-            import glob as _glob
-
-            here = os.path.dirname(os.path.abspath(__file__))
-            rounds = [
-                int(m.group(1))
-                for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-                if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-            ]
-            rnd = max(rounds, default=0) + 1
+            rnd = committed + 1
             cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
             snap = os.path.join(
                 here, f"BENCH_DETAIL_r{rnd:02d}_c{cpus}.json"

@@ -59,3 +59,47 @@ def test_last_merged_line_is_bench_json(tmp_path):
     # 2000-char tail of the MERGED stream (the driver's actual capture).
     tail = merged[-2000:]
     assert lines[-1] in tail
+
+
+def _bench_module():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_under_test", os.path.join(REPO, "bench.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_steal_share_excludes_guest_and_checks_field_count():
+    steal = _bench_module()._steal_pct_of_busy
+    before = [0] * 10
+    # user 100 (of which guest 40), system 20, idle 500, iowait 30, steal 20
+    after = [100, 0, 20, 500, 30, 0, 0, 20, 40, 0]
+    # busy = user 100 + system 20 + steal 20 = 140; summing every field
+    # would count the 40 guest jiffies a second time (180)
+    assert steal(before, after) == round(20 / 140 * 100, 1)
+    assert steal([0] * 7, [1] * 7) is None  # no steal field: no reading
+    assert steal([], []) is None  # /proc/stat unreadable
+    assert steal([0] * 8, [0, 0, 0, 9, 0, 0, 0, 0]) is None  # nothing busy
+
+
+def test_sidecar_round_counts_only_committed_artifacts(tmp_path):
+    committed_round = _bench_module()._committed_round
+    assert committed_round(str(tmp_path)) is None  # not a git checkout
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, check=True, capture_output=True,
+        )
+
+    git("init", "-q")
+    assert committed_round(str(tmp_path)) == 0
+    for name in ("BENCH_r03.json", "BENCH_r13_c8.json"):
+        (tmp_path / name).write_text("{}")
+    git("add", ".")
+    git("commit", "-q", "-m", "artifacts")
+    (tmp_path / "BENCH_r09.json").write_text("{}")  # uncommitted
+    assert committed_round(str(tmp_path)) == 3

@@ -66,18 +66,47 @@ def test_registry_keeps_one_handle_per_site(spark, sf_dir):
 
 
 def test_per_invocation_sites_do_not_unpersist_siblings(spark):
-    """ADVICE r13 #1: two invocations of a per-invocation site inside one
-    job graph must both stay persisted (a fixed key would unpersist the
-    first, breaking the single-execution contract); a later 'run' (the
-    next pair of invocations) still evicts the previous run's entries."""
-    from apache_flink_spark.run_cache import run_persist_per_invocation
+    """ADVICE r13 #1: every invocation of a per-invocation site inside one
+    job graph must stay persisted (a fixed key would unpersist the first,
+    breaking the single-execution contract); the next run's first
+    invocation still evicts the previous run's entries."""
+    from apache_flink_spark.run_cache import begin_run, run_persist_per_invocation
 
+    begin_run()
     a = run_persist_per_invocation(spark.range(5), "test.site")
     b = run_persist_per_invocation(spark.range(7), "test.site")
-    assert a.storageLevel.useMemory and b.storageLevel.useMemory
     c = run_persist_per_invocation(spark.range(9), "test.site")
+    assert all(x.storageLevel.useMemory for x in (a, b, c))
+    begin_run()
     d = run_persist_per_invocation(spark.range(11), "test.site")
+    e = run_persist_per_invocation(spark.range(13), "test.site")
     # the first run's entries were evicted by the second run's
-    assert not a.storageLevel.useMemory
-    assert not b.storageLevel.useMemory
-    assert c.storageLevel.useMemory and d.storageLevel.useMemory
+    assert not any(x.storageLevel.useMemory for x in (a, b, c))
+    assert d.storageLevel.useMemory and e.storageLevel.useMemory
+
+
+def test_once_per_run_site_starts_cold(spark):
+    """A site invoked ONCE per run: run 2 must not find run 1's entry
+    alive, or CacheManager re-serves run 1's materialized intermediate.
+    The run generation bumped at query entry drops it."""
+    from apache_flink_spark.queries.registry import ORACLES, QUERIES, STREAMING, query
+    from apache_flink_spark.run_cache import run_persist_per_invocation
+
+    def body(spark, sf_dir):
+        return run_persist_per_invocation(
+            spark.range(50).selectExpr("id % 7 AS k"), "test.once_per_run"
+        )
+
+    run = query("__test_once_per_run_site")(body)
+    try:
+        df1 = run(spark, None)
+        df1.write.format("noop").mode("overwrite").save()
+        assert any(_imr_loaded_states(df1))
+        df2 = run(spark, None)
+        states = _imr_loaded_states(df2)
+        assert states and not any(states), "run 2 reused run 1's cache"
+        assert df2.count() == 50
+    finally:
+        QUERIES.pop("__test_once_per_run_site", None)
+        ORACLES.pop("__test_once_per_run_site", None)
+        STREAMING.discard("__test_once_per_run_site")
